@@ -2,7 +2,9 @@ package graft.core
 
 import org.apache.spark.sql.SparkSession
 
-/** Session factory for the engine.
+/** Session factory for the engine — the one place a `SparkSession` is
+  * built, so every entry point (Bench, Verify, PlanDump, PlatformE2E,
+  * ClusterParity) runs under the same config.
   *
   * Scale posture (SURVEY.md §4): AQE on (runtime coalesce + skew-join
   * handling), dynamic partition overwrite (idempotent per-partition
@@ -13,8 +15,20 @@ import org.apache.spark.sql.SparkSession
   * coalesces down.
   */
 object GraftSession {
-  def builder(master: String = sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[32]"),
-              shufflePartitions: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+  /** Local thread count (and default shuffle partitions) from
+    * `SPARK_GRAFT_CPUS`, default 32. */
+  def cpus: Int = parseCpus(sys.env.get("SPARK_GRAFT_CPUS"))
+
+  /** A positive integer, or an error naming the variable: the value lands
+    * in `local[...]`, in JSON lines and in artifact file names, so `*` or
+    * `0` must not get that far. */
+  def parseCpus(raw: Option[String]): Int = raw.fold(32) { v =>
+    v.trim.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+      s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'"))
+  }
+
+  def builder(master: String = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"),
+              shufflePartitions: Int = cpus)
       : SparkSession.Builder =
     SparkSession.builder()
       .master(master)
@@ -34,10 +48,4 @@ object GraftSession {
       // DedupOps.bloomDeltaNew) — plan-asserted in PlanQualitySpec
       .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
       .config("spark.ui.enabled", "false")
-
-  def get(): SparkSession = {
-    val s = builder().getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
 }

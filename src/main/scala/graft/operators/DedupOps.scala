@@ -146,23 +146,14 @@ object DedupOps {
     * rarity order, with their 1-based rank `rn` — the shared prefix
     * selection behind [[jaccardPairs]] and [[containmentPairs]].
     *
-    * DEPLOYED as the `row_number()` window — the r15 round built the
-    * bounded-heap partial-aggregate challenger ([[rarestPrefixesAgg]] /
-    * [[graft.functions.BottomKRarestAgg]], the "native codegen'd
-    * bounded-heap" lane the r14 typed-Aggregator refutation left open)
-    * and REFUTED it by measurement at BOTH sf0.1 and sf1 (Opt15Probe,
-    * min-of-3, identical outputs): stage-isolated, agg loses 0.79×/0.82×
-    * at both scales. Why the theory fails: ObjectHashAggregateExec falls
-    * back to SORT-based aggregation past 128 groups per partition —
-    * every realistic corpus — so the "no sort" claim evaporates (the
-    * partial stage sorts the same posting rows the window sorts, then
-    * pays interpreted per-row heap updates on top), and the genuine
-    * shuffle-row reduction (256k→28k rows at t=0.9) is worth less than
-    * the CPU constant even at 10× data. Raising the fallback threshold
-    * recovers parity at sf0.1 but LOSES at sf1 (hash-map pressure) and
-    * is memory-unsafe at 100 TB. The challenger stays committed and
-    * property-pinned (PropertySpec "rarest-prefix bounded-heap") as the
-    * refutation record. */
+    * DEPLOYED as the `row_number()` window. A codegen'd bounded-heap
+    * partial aggregate was built as a challenger in r15 and REFUTED at
+    * both sf0.1 and sf1 (0.79×/0.82× stage-isolated, identical outputs):
+    * ObjectHashAggregateExec falls back to SORT-based aggregation past
+    * 128 groups per partition, so the partial stage sorts the same
+    * posting rows the window sorts and pays interpreted per-row heap
+    * updates on top. Evidence: OPTIMIZATION_r15.md §1; the code is in
+    * git history. */
   private[graft] def rarestPrefixes(posting: DataFrame,
                                     prefixLen: Column): DataFrame = {
     val freq = posting.groupBy(col("h")).agg(count(lit(1)).as("df"))
@@ -171,22 +162,6 @@ object DedupOps {
       .withColumn("rn", row_number().over(byRarity))
       .filter(col("rn") <= prefixLen)
       .select(col("id"), col("sz"), col("rn"), col("h"))
-  }
-
-  /** The REFUTED bounded-heap aggregate challenger (see
-    * [[rarestPrefixes]]) — kept with its property pin and Opt15AB/
-    * Opt15Probe evidence so the next round doesn't re-litigate it
-    * without new reasons. */
-  private[graft] def rarestPrefixesAgg(posting: DataFrame,
-                                       prefixLen: Column): DataFrame = {
-    val freq = posting.groupBy(col("h")).agg(count(lit(1)).as("df"))
-    posting.join(freq, "h")
-      .groupBy(col("id"), col("sz"))
-      .agg(graft.functions.BottomKRarest(col("df"), col("h"),
-        prefixLen.cast("int")).as("pfx"))
-      .select(col("id"), col("sz"), posexplode(col("pfx")))
-      .select(col("id"), col("sz"), (col("pos") + 1).cast("int").as("rn"),
-        col("col").as("h"))
   }
 
   /** Exact set-similarity join with PPJoin-style prefix filtering: under
@@ -251,11 +226,16 @@ object DedupOps {
     * comparing the result against any bound ≤ cutoff is EXACT while the
     * probe never pays a full O(N) pass — at 100 TB the r14 form's
     * `docs.count()` was one extra full scan per query purely to pick a
-    * branch (VERDICT r14 "what's wrong" #3). Returns min(N, cutoff + 1). */
+    * branch (VERDICT r14 "what's wrong" #3). Returns min(N, cutoff + 1).
+    * `limit` takes an Int, so a cutoff from Int.MaxValue - 1 up (e.g. a
+    * verifyJoinCutoff of Long.MaxValue, "always attach-join") pays the
+    * exact full count instead: clamping the bound would misreport large
+    * corpora as small, and `cutoff + 1` wraps to a zero-row limit. */
   private def boundedCount(docs: DataFrame, idCol: String,
                            cutoff: Long): Long = {
-    val bound = math.min(cutoff + 1, Int.MaxValue.toLong - 1).toInt
-    docs.select(col(idCol)).limit(bound).count()
+    val ids = docs.select(col(idCol))
+    if (cutoff >= Int.MaxValue - 1) ids.count()
+    else ids.limit((cutoff + 1).toInt).count()
   }
 
   /** Attach-join verify: join the full encoded arrays to each candidate
@@ -291,9 +271,8 @@ object DedupOps {
     * re-expressed on `cogroupSorted`):
     *
     *  - pairs are bucketed by `xxhash64(id_a) % P` (P =
-    *    `spark.graft.dedup.verifyBuckets`, default shuffle partitions, so
-    *    raising parallelism for a bigger corpus also shrinks per-task
-    *    state);
+    *    `spark.sql.shuffle.partitions`, so raising parallelism for a
+    *    bigger corpus also shrinks per-task state);
     *  - the a-side set partition is the same hash — co-partitioned, no
     *    replication; it becomes a per-bucket id→array map of ~|S|/P
     *    bytes (the ONLY materialized state);
@@ -315,8 +294,7 @@ object DedupOps {
     import org.apache.spark.sql.{Encoders, Row}
     import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
     val spark = candidates.sparkSession
-    val nBuckets = spark.conf.getOption("spark.graft.dedup.verifyBuckets")
-      .getOrElse(spark.conf.get("spark.sql.shuffle.partitions", "200")).toInt
+    val nBuckets = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val idType = candidates.schema("id_a").dataType
 
     val pairs = candidates.select(
@@ -579,7 +557,7 @@ object DedupOps {
     // exchange, i.e. single-task on a single-split input — the order
     // invertedIndexPairs already uses. Same rows, same one exchange,
     // comparable shuffle bytes (raw text vs hash arrays); A/B 1.11–1.13×
-    // on dedup_containment_bottomk (Opt15AB bottomk_repart_first).
+    // on dedup_containment_bottomk (OPTIMIZATION_r15.md §8).
     val sets = docs
       .repartition(docs.sparkSession.sparkContext.defaultParallelism)
       .select(col(idCol).as("id"),

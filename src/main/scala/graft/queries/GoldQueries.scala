@@ -83,9 +83,9 @@ object GoldQueries {
       // dispatch dedup_components deploys): above the ~10k-doc crossover
       // it IS the PPJoin prefix index (the 100 TB form); below it the
       // dense merge kernel wins on constants. Branches are property-
-      // tested identical, so survivors never change — A/B OptAB r14:
-      // 1.75× at sf0.1 (the quality-gated corpus sits under the
-      // crossover there)
+      // tested identical, so survivors never change — 1.75× at sf0.1,
+      // where the quality-gated corpus sits under the crossover
+      // (OPTIMIZATION_r14.md Batch 1)
       val nearDupLosers = graft.operators.DedupOps
         .jaccardPairsAuto(withShingles, "doc_id", "sh", 0.9)
         .select($"id_b".as("doc_id")).distinct()

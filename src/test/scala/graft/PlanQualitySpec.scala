@@ -80,6 +80,22 @@ class PlanQualitySpec extends SparkSpec {
       s"near-dup stage must be an equi-join candidate generator, not all-pairs:\n$plan")
   }
 
+  test("verifyJoinCutoff=Long.MaxValue still sizes the corpus exactly: a " +
+       "corpus above denseCutoff plans the prefix index, not all-pairs") {
+    // a probe limit of cutoff + 1 wraps at Long.MaxValue to zero rows: the
+    // corpus would read as empty and take the dense N² kernel whatever
+    // denseCutoff says
+    val docs = Seq("a b c d e", "a b c d f", "v w x y z", "a b c d e")
+      .zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+      .select($"doc_id", graft.operators.TextOps.shingles($"text", 2).as("sh"))
+    spark.conf.set("spark.graft.dedup.verifyJoinCutoff", Long.MaxValue.toString)
+    val plan = try physicalPlan(graft.operators.DedupOps
+        .jaccardPairsAuto(docs, "doc_id", "sh", 0.5, denseCutoff = 1L))
+      finally spark.conf.unset("spark.graft.dedup.verifyJoinCutoff")
+    assert(!plan.contains("NestedLoopJoin"),
+      s"4 docs > denseCutoff 1 must take the prefix-index branch:\n$plan")
+  }
+
   test("rp_signature LSH kernel runs inside whole-stage codegen (no fallback)") {
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     val gen = try {
